@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.Numeric.microRound
+import graft.functions.VectorFunctions.vectorSum
 
 /** Spherical k-means (cosine Lloyd iterations) over an embedding
   * corpus.
@@ -12,11 +13,12 @@ import graft.functions.Numeric.microRound
   * Mirrors recap-worker's clustering step
   * (recap-worker/recap-worker/src/util/kmeans.rs:22 KMeans::new — k-means over
   * sentence embeddings for recap grouping), as iterated DataFrame
-  * plans: each iteration is one broadcast-assign (no shuffle of the
-  * corpus) plus one posexplode aggregation (one shuffle keyed by
-  * (cluster, dim) — bounded by k×dim groups). Centroids stay tiny and
-  * broadcast; the corpus is persisted once and never re-shuffled, so
-  * iteration cost is linear scans — the plan a 100 TB run needs.
+  * plans: each iteration is one driver-side-centroid assign (no
+  * shuffle of the corpus) plus one per-dimension mean aggregation
+  * (one shuffle keyed by cluster — bounded by k groups of dim
+  * numbers). Centroids stay tiny and ship inside the plan; the corpus
+  * is persisted once and never re-shuffled, so iteration cost is
+  * linear scans — the plan a 100 TB run needs.
   */
 object KMeans {
 
@@ -35,9 +37,11 @@ object KMeans {
     var i = 0
     while (i < iters) {
       // assignToCentroids collects the k centroids to the driver and
-      // bakes them into the next plan as literals, so each iteration's
-      // lineage is exactly (corpus cache scan → one projection) — no
-      // chained lineage, no per-iteration persist, no corpus fan-out.
+      // holds them in the next plan's NearestCentroid kernel, so each
+      // iteration's lineage is exactly (corpus cache scan → one
+      // projection) — no chained lineage, no per-iteration persist, no
+      // corpus fan-out. The kernel, not a ladder of k cosine literals,
+      // keeps that projection small enough for the JIT to compile.
       val cents = Similarity.centroidsFor(assigned, "cell", dim)
       assigned = Similarity.assignToCentroids(corpus, cents)
       i += 1
@@ -83,17 +87,8 @@ object KMeans {
     var ep = 0
     while (ep < epochs) {
       val batch = corpus.sample(withReplacement = false, fraction, seed + ep)
-      val assigned = Similarity.assignToCentroidLiterals(
-        batch, cellLit, cents.map(_.toSeq).toSeq)
-      // one row per cell: batch count + per-dim batch sums after ONE
-      // map-side partial agg (the posexplode form fanned the batch ×dim
-      // and shuffled (cell,pos) rows; same sums, same row order)
-      val stats = assigned
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n"),
-          array((1 to dim).map(i =>
-            sum(element_at(col("embedding"), i).cast("double"))): _*).as("s"))
-        .collect()
+      val stats = batchStats(
+        Similarity.assignToCentroidLiterals(batch, cellLit, cents), dim).collect()
       val batchN = Array.fill(init.length)(0L)
       stats.foreach { r =>
         val j = cellIdx(r.get(0))
@@ -111,10 +106,21 @@ object KMeans {
       ep += 1
     }
     corpus.unpersist(blocking = false)
-    Similarity.assignToCentroidLiterals(e, cellLit, cents.map(_.toSeq).toSeq)
+    Similarity.assignToCentroidLiterals(e, cellLit, cents)
       .withColumnRenamed("cell", "cluster")
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** One row per cell of a batch assignment → (cell, n, s): the batch
+    * count and the per-dimension batch sums, after ONE map-side partial
+    * `VectorAgg` — the same sums, in the same row order, as `dim`
+    * separate `sum(element_at(e, i))` aggregates, from one aggregate
+    * instead of `dim`. The posexplode form before those fanned the
+    * batch out ×dim and shuffled (cell, pos) rows.
+    */
+  private[operators] def batchStats(assigned: DataFrame, dim: Int): DataFrame =
+    assigned.groupBy("cell")
+      .agg(count(lit(1)).as("n"), vectorSum(col("embedding"), dim).as("s"))
 
   /** Quantized mean of the assignment's `cc` column: per-member cosine
     * snapped to exact 1e-6-unit longs, summed order-independently,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.Numeric.{microRatio, microRound}
-import graft.functions.VectorFunctions.cosineSim
+import graft.functions.VectorFunctions.{centroidCosines, cosineSim, nearestCentroid, vectorMean}
 
 /** Vector similarity / ANN operators over the `embeddings` table.
   *
@@ -61,24 +61,25 @@ object Similarity {
     * centroid: array<double>). Shared by IVF, k-means, and the
     * centroid-summary query — fix the math once, every caller follows.
     *
-    * ONE map-side-combined aggregation of `dim` per-dimension avgs
-    * (guide §2.3/§2.4): the old posexplode form fanned the corpus out
-    * ×dim and paid a second shuffle re-assembling the array
-    * (groupBy(cell,pos) then groupBy(cell)); per-dim avg over
-    * element_at reads the same values in the same row order, so the
-    * centroid doubles are unchanged. Callers that already know `dim`
-    * pass it (seeds/encode paths); the 2-arg form probes one row.
+    * ONE map-side-combined `VectorAgg` (per-dimension double sums and
+    * non-null counts, mean = sum / count): the same values in the same
+    * row order as `dim` separate `avg(element_at(e, i))` aggregates,
+    * so the centroid doubles are unchanged. At dim 64 those aggregates
+    * held 128 buffer fields, over `spark.sql.codegen.maxFields` (100),
+    * so the aggregation fell out of whole-stage codegen; the posexplode
+    * form before them fanned the corpus out ×dim and paid a second
+    * shuffle. Callers that already know `dim` pass it (seeds/encode
+    * paths); the 2-arg form probes one row.
     */
   private[operators] def centroidsFor(e: DataFrame, cellCol: String, dim: Int): DataFrame =
     e.groupBy(col(cellCol).as("cell"))
-      .agg(array((1 to dim).map(i =>
-        avg(element_at(col("embedding"), i).cast("double"))): _*).as("centroid"))
+      .agg(vectorMean(col("embedding"), dim).as("centroid"))
 
   private[operators] def centroidsFor(e: DataFrame, cellCol: String): DataFrame =
     centroidsFor(e, cellCol, dimOf(e))
 
-  /** Embedding width probed from one row — drives the unrolled codegen
-    * kernels below (the array width is a plan-time constant there).
+  /** Embedding width probed from one row — the plan-time width of the
+    * per-dimension aggregates and of the unrolled PQ/binary kernels.
     */
   private[operators] def dimOf(e: DataFrame): Int =
     e.select(size(col("embedding"))).head().getInt(0)
@@ -87,21 +88,27 @@ object Similarity {
     * cell-asc tie-break) → (vec_id, embedding, cell, cc).
     *
     * The centroid table is tiny (≤ k rows × dim) so it is collected to
-    * the driver and baked into the plan as literals — the per-row
-    * argmax is then ONE projection over the corpus: k codegen'd
-    * cosine kernels into an array, `array_max` + `array_position` for
-    * the winner. No join, no window, no shuffle, and the corpus never
-    * fans out ×k — the same driver-side-centroids shape MLlib's
-    * k-means uses, which is what survives a 100 TB corpus.
+    * the driver and held in the plan as a double[k][dim] matrix — the
+    * per-row argmax is then ONE projection over the corpus: the
+    * `NearestCentroid` kernel computes the row norm once and one dot
+    * product per centroid. No join, no window, no shuffle, and the
+    * corpus never fans out ×k — the same driver-side-centroids shape
+    * MLlib's k-means uses, which is what survives a 100 TB corpus.
     *
-    * Tie-break: centroids are scanned in ascending-cell order and
-    * `array_position` returns the FIRST index holding the max, so
-    * equal scores resolve to the smallest cell — identical to the old
-    * `orderBy(cc desc, cell asc)` window.
+    * The kernel replaced a ladder of k literal cosine expressions plus
+    * `array_max`/`array_position`. At k = 32, dim = 64 that ladder made
+    * the stage's `processNext()` 9,724 bytecode bytes, over HotSpot's
+    * 8,000-byte limit, so the JIT never compiled it: a 1000-row assign
+    * pass took 181 ms with whole-stage codegen and 40 ms with it off;
+    * the kernel takes 41 ms (medians of 15 passes, 4-vCPU VM).
+    *
+    * Tie-break: centroids are scanned in ascending-cell order and the
+    * FIRST maximum wins, so equal scores resolve to the smallest cell —
+    * identical to the old `orderBy(cc desc, cell asc)` window.
     */
   private[operators] def assignToCentroids(e: DataFrame, centroids: DataFrame): DataFrame = {
     val (ordered, cellLit) = sortedCellsAndLit(centroids.select("cell", "centroid").collect())
-    assignToCentroidLiterals(e, cellLit, ordered.map(_.getSeq[Double](1)))
+    assignToCentroidLiterals(e, cellLit, ordered.map(_.getSeq[Double](1).toArray))
   }
 
   /** Sort a collected (cell, centroid) table ascending by cell and
@@ -123,19 +130,18 @@ object Similarity {
     }
   }
 
-  /** The literal-centroid core of the assignment: callers that already
-    * hold the centroids driver-side (mini-batch k-means keeps them as
-    * mutable driver state between batches) skip the collect.
+  /** The driver-side-centroid core of the assignment: callers that
+    * already hold the centroids (mini-batch k-means keeps them as
+    * mutable driver state between batches) skip the collect. `cents(i)`
+    * is the centroid of `cellLit`'s i-th cell; the plan keeps its own
+    * copy, so later updates to `cents` do not reach it.
     */
   private[operators] def assignToCentroidLiterals(
-      e: DataFrame, cellLit: Column, cents: Seq[Seq[Double]]): DataFrame = {
-    val ccs = array(cents.map(c => cosineSim(col("embedding"), typedlit(c))): _*)
-    e.select(col("vec_id"), col("embedding"), ccs.as("ccs"))
-      .withColumn("idx", array_position(col("ccs"), array_max(col("ccs"))).cast("int"))
+      e: DataFrame, cellLit: Column, cents: Array[Array[Double]]): DataFrame =
+    e.select(col("vec_id"), col("embedding"),
+        nearestCentroid(col("embedding"), cents.map(_.clone)).as("nc"))
       .select(col("vec_id"), col("embedding"),
-        element_at(cellLit, col("idx")).as("cell"),
-        element_at(col("ccs"), col("idx")).as("cc"))
-  }
+        element_at(cellLit, col("nc.idx") + 1).as("cell"), col("nc.cc").as("cc"))
 
   /** Train `cells` centroids with `iters` Lloyd rounds from hash-seeded
     * deterministic starts — the IVF training loop shared by sim06 and
@@ -145,21 +151,21 @@ object Similarity {
     * reach the driver.
     */
   private[operators] def trainCentroids(
-      v: DataFrame, cells: Int, iters: Int): Seq[Seq[Double]] = {
+      v: DataFrame, cells: Int, iters: Int): Array[Array[Double]] = {
     val seeds = v.orderBy(pmod(hash(col("vec_id")), lit(1000003)).asc, col("vec_id").asc)
       .limit(cells).collect()
-    var cents: Seq[Seq[Double]] = seeds.map(_.getSeq[Any](1).map {
+    var cents: Array[Array[Double]] = seeds.map(_.getSeq[Any](1).map {
       case f: Float => f.toDouble
       case d: Double => d
-    }.toSeq).toSeq
+    }.toArray)
     val cellLit = typedlit((0 until cells).toList)
     val dim = cents.head.length
     var i = 0
     while (i < iters) {
       val assigned = assignToCentroidLiterals(v, cellLit, cents)
       val updated = centroidsFor(assigned, "cell", dim).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      cents = cents.indices.map(c => updated.getOrElse(c, cents(c)))
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+      cents = cents.indices.map(c => updated.getOrElse(c, cents(c))).toArray
       i += 1
     }
     cents
@@ -301,7 +307,7 @@ object Similarity {
         assigned.filter(queryPred)
           .select(col("cell"), col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       else {
-        val ccsArr = array(cents.map(c => cosineSim(col("embedding"), typedlit(c))): _*)
+        val ccsArr = centroidCosines(col("embedding"), cents)
         // negated cosine + ascending sort = (cc desc, cell asc): ties
         // resolve to the SMALLEST cell, matching the probes=1 argmax
         val probeStructs = transform(sequence(lit(0), lit(cells - 1)),

@@ -102,17 +102,17 @@ object ProfileSim {
       val seeds = t("sim06: seeds collect")(
         v.orderBy(pmod(hash(col("vec_id")), lit(1000003)).asc, col("vec_id").asc)
           .limit(cells).collect())
-      var cents: Seq[Seq[Double]] = seeds.map(_.getSeq[Any](1).map {
+      var cents: Array[Array[Double]] = seeds.map(_.getSeq[Any](1).map {
         case f: Float => f.toDouble
         case d: Double => d
-      }.toSeq).toSeq
+      }.toArray)
       val cellLit = typedlit((0 until cells).toList)
       (0 until 2).foreach { i =>
         val assigned = Similarity.assignToCentroidLiterals(v, cellLit, cents)
         val updated = t(s"sim06: iter $i centroidsFor+collect")(
           Similarity.centroidsFor(assigned, "cell").collect()
-            .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap)
-        cents = cents.indices.map(c => updated.getOrElse(c, cents(c)))
+            .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap)
+        cents = cents.indices.map(c => updated.getOrElse(c, cents(c))).toArray
       }
       val assignedF = Similarity.assignToCentroidLiterals(v, cellLit, cents)
         .select("vec_id", "embedding", "cell")

@@ -371,6 +371,28 @@ class PlanSpec extends SparkSpec {
       "Window in the assignment plan")
   }
 
+  test("k-means assignment stage compiles under HotSpot's 8,000-byte method limit at k = 32, dim = 64") {
+    // A ladder of k literal cosines spliced into the stage made its
+    // processNext() 9,724 bytes at sim06's 32 cells: too big for the
+    // JIT, so every row ran in the bytecode interpreter.
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val e = Tables.embeddings(spark, sfDir)
+      .withColumn("label", (org.apache.spark.sql.functions.col("vec_id") % 32).cast("int"))
+    val assigned = graft.operators.KMeans.fit(e, 1)
+    try {
+      assert(assigned.select("cluster").distinct().count() > 1)
+      // the fitted frame is persisted: the assignment stage is the cached plan
+      val stages = allNodes(assigned.queryExecution.executedPlan)
+        .collect { case m: InMemoryTableScanExec => allNodes(m.relation.cachedPlan) }.flatten
+        .collect { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, "no whole-stage codegen in the assignment plan")
+      val maxMethod = stages.map(w => CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize).max
+      assert(maxMethod < 8000, s"largest generated method is $maxMethod bytecode bytes")
+    } finally assigned.unpersist()
+  }
+
   test("tx39 gopher rules plan no shuffle and no window — a stateless scan projection") {
     val nodes = allNodes(finalPlan("tx39_gopher_rules"))
     assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),

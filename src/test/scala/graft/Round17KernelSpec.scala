@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
-/** Value pins for the round-16 kernel rewrites (Similarity/KMeans):
-  * the unrolled codegen forms must compute the same numbers as the
-  * straightforward posexplode / HOF references they replaced, and the
-  * edge behaviors the rewrite changed are pinned explicitly.
+/** Value pins for the Similarity/KMeans kernel rewrites: the
+  * aggregates and unrolled codegen forms the operators run must compute
+  * the same numbers as the straightforward posexplode / HOF references
+  * they replaced, and the edge behaviors the rewrites changed are
+  * pinned explicitly.
   */
 class Round17KernelSpec extends SparkSpec {
 
@@ -37,16 +38,15 @@ class Round17KernelSpec extends SparkSpec {
   test("the mini-batch per-dim sums match the posexplode reference") {
     val e = emb.withColumn("cell", (col("vec_id") % 5).cast("int"))
     val dim = Similarity.dimOf(e)
-    val fast = e.groupBy("cell")
-      .agg(array((1 to dim).map(i =>
-        sum(element_at(col("embedding"), i).cast("double"))): _*).as("s"))
-      .collect().map(r => r.get(0) -> r.getSeq[Double](1)).toMap
+    val fast = KMeans.batchStats(e, dim)
+      .collect().map(r => r.get(0) -> r.getSeq[Double](2)).toMap
     val ref = e.select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("cell", "pos").agg(sum(col("v").cast("double")).as("s"))
       .groupBy("cell")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
         x => x.getField("s")).as("sums"))
       .collect().map(r => r.get(0) -> r.getSeq[Double](1)).toMap
+    assert(fast.keySet == ref.keySet)
     for (cell <- fast.keySet; i <- 0 until dim) {
       val (a, b) = (fast(cell)(i), ref(cell)(i))
       assert(math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(b)),
